@@ -69,3 +69,11 @@ def chk_row(chk: str, ok_col):
     from pyspark.sql import functions as F
 
     return F.lit(chk).alias("chk"), ok_col.cast("long").alias("ok")
+
+
+def chk_struct(chk: str, ok_col):
+    """chk_row as one struct, so several checks over one input come out
+    of a single pass as ``F.inline(F.array(chk_struct(..), ...))``."""
+    from pyspark.sql import functions as F
+
+    return F.struct(*chk_row(chk, ok_col))

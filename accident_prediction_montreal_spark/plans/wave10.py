@@ -488,24 +488,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     "not different answers).",
 )
 def st_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _st_incremental_dedup_impl(spark, sf_dir)
-
-
-def _st_incremental_dedup_impl(
-    spark: SparkSession, sf_dir: str, timings: dict | None = None
-) -> DataFrame:
-    """Body of st_incremental_dedup. ``timings``, when a dict, receives
-    ``index_build_s`` (the one-off at-rest corpus index materialization
-    — the cost a real pipeline pays once, NOT per batch) and
-    ``probe_s`` (the steady-state streaming probe) so bench artifacts
-    can report the two separately: a bundled number misrepresents a
-    sub-second steady-state operator as an 11 s one
-    (BENCH_stress_r9.json established the split; this keeps it in the
-    per-round artifact)."""
     import os
-    import time as _time
-
-    _impl_t0 = _time.perf_counter()
 
     from pyspark.sql import types as T
 
@@ -541,10 +524,7 @@ def _st_incremental_dedup_impl(
     # probe run across 3 genuine micro-batches.
     base, _ = _scratch("stincr", sf_dir)
     fix_dir = os.path.join(base, "batch")
-    _t0 = _time.perf_counter()
     new_batch.repartition(3).write.mode("overwrite").parquet(fix_dir)
-    if timings is not None:
-        timings["fixture_write_s"] = round(_time.perf_counter() - _t0, 3)
 
     # The at-rest index is persisted PRE-PARTITIONED on the probe key —
     # the cached HashPartitioning then satisfies every micro-batch's
@@ -578,10 +558,7 @@ def _st_incremental_dedup_impl(
     # micro-batch would run the signature aggregation under the sink
     # runner's small state-partition pin (8-way instead of the session's
     # full parallelism — measured ~4x slower on the 52.5k-doc corpus).
-    _t0 = _time.perf_counter()
     bands_full.count()
-    if timings is not None:
-        timings["index_build_s"] = round(_time.perf_counter() - _t0, 3)
 
     schema = T.StructType(
         [
@@ -615,14 +592,11 @@ def _st_incremental_dedup_impl(
     probed = stream_bands.join(idx, ["band_id", "band_hash"]).select(
         "new_id", "corpus_id"
     )
-    _t0 = _time.perf_counter()
     streamed = (
         _run_to_memory_sink(spark, probed, "append")
         .dropDuplicates(["new_id", "corpus_id"])
         .persist()
     )
-    if timings is not None:
-        timings["probe_s"] = round(_time.perf_counter() - _t0, 3)
 
     expected = dup_src.select(
         (F.col("doc_id") + 200_000).alias("new_id"),
@@ -652,32 +626,7 @@ def _st_incremental_dedup_impl(
     twin_ok = diff.agg(F.count(F.lit(1)).alias("n")).select(
         *_chk("st_incr_matches_batch_twin", F.col("n") == 0)
     )
-    checks = planted_ok.unionByName(novel_ok).unionByName(twin_ok)
-    if timings is not None:
-        # VERIFICATION contracts, not the operator: the batch-twin
-        # parity check re-signatures the corpus (a second full minhash
-        # pass), which is why the bundled query total far exceeds
-        # index_build + probe. Materialize here so the split fields
-        # sum to ~the query total (r10 verdict #6: 12.7 s read with
-        # only 6.2 s attributed).
-        _t0 = _time.perf_counter()
-        checks = checks.persist()
-        checks.count()
-        timings["contracts_s"] = round(_time.perf_counter() - _t0, 3)
-        staged = (
-            timings.get("fixture_write_s", 0.0)
-            + timings.get("index_build_s", 0.0)
-            + timings.get("probe_s", 0.0)
-            + timings["contracts_s"]
-        )
-        wall = _time.perf_counter() - _impl_t0
-        # Driver-side analysis/setup BETWEEN the timed actions (plan
-        # construction, stream checkpoint dirs, catalyst analysis of
-        # ~10 actions) — named so the stage fields always sum to the
-        # observed wall (±ε), never leaving a silent remainder.
-        timings["plan_setup_s"] = round(max(0.0, wall - staged), 3)
-        timings["total_s"] = round(wall, 3)
-    return checks
+    return planted_ok.unionByName(novel_ok).unionByName(twin_ok)
 
 
 @register(

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import hashlib
+
 import pytest
 
 from accident_prediction_montreal_spark.plans import REGISTRY
@@ -76,6 +78,21 @@ def test_registry_contract():
     for name, spec in REGISTRY.items():
         assert callable(spec.fn), name
         assert spec.description, name
+
+
+#: SHA-256 of "\n".join(REGISTRY): the registration ORDER that
+#: __spark_entry__.queries() exposes (the first 50 names are the oracle
+#: check window). Adding, removing or reordering a query changes it;
+#: update it only on purpose.
+_REGISTRY_ORDER_SHA256 = (
+    "eba10139a7ac9bfeb137c478b4fc69d8bf2ca429489b79cbde8fc3b688ae1356"
+)
+
+
+def test_registry_order_pinned():
+    assert len(REGISTRY) == 264
+    digest = hashlib.sha256("\n".join(REGISTRY).encode()).hexdigest()
+    assert digest == _REGISTRY_ORDER_SHA256
 
 
 def test_entry_module_contract(spark):
